@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def degrees(edges: DataFrame) -> DataFrame:
     """(uri, out_deg, in_deg) from edges(src, dst)."""
@@ -400,7 +402,7 @@ def bfs_distances(
 
     spark = edges.sparkSession
     if isinstance(sources, list):
-        sources = spark.createDataFrame([(s,) for s in sources], "uri string")
+        sources = local_frame(spark, [(s,) for s in sources], "uri string")
     # materialize the cleaned edge set ONCE: every level joins against it,
     # and without the checkpoint each round re-runs the upstream plan
     # (regex extraction when the edges come straight from extract()) —
@@ -1113,8 +1115,9 @@ def weighted_sssp(
     from pyspark.sql import Observation
 
     if isinstance(sources, list):
-        spark = edges.sparkSession
-        sources = spark.createDataFrame([(s,) for s in sources], "uri string")
+        sources = local_frame(
+            edges.sparkSession, [(s,) for s in sources], "uri string"
+        )
     # loop-invariant edge set materialized once (each round joins it; an
     # un-checkpointed e would re-run the upstream plan every round)
     e = edges.select("src", "dst", F.col("w").cast("double")).localCheckpoint()

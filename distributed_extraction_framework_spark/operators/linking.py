@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from .. import schema as S
+from ..session import local_frame
 
 try:  # C-speed automaton when available on the cluster (not in this container)
     import ahocorasick as _pyahocorasick
@@ -635,7 +636,7 @@ def detect_mentions_distributed(
     mn = dsurf.agg(F.min(F.length("surface")).alias("mn")).first()["mn"]
     out_schema = "page string, surface string, n_mentions long"
     if mn is None:  # empty dictionary: no mentions anywhere
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     k = int(max(1, min(prefix_len, mn)))
     idx = dsurf.select(F.substring("surface", 1, k).alias("gram"), "surface")
 
@@ -782,8 +783,9 @@ def link_entities(
 
     * **small dictionary** (≤ ``broadcast_rows`` — the reference's own
       ``collectAsMap`` smallness contract, DistConfigLoader.scala:217-225):
-      ONE bounded driver collect feeds both the broadcast automaton
-      surfaces and a broadcast scoring join; the mention groupBy's
+      ONE bounded driver collect of the surfaces feeds the broadcast
+      automaton, and the scoring join broadcasts the checkpointed
+      dictionary (no driver-side re-creation); the mention groupBy's
       (page, surface) partitioning is reused by the scoring window, so the
       whole pass is two scans + one shuffle + one action;
     * **large dictionary, ≤ ``max_broadcast_shards`` shards**: the driver
@@ -814,12 +816,14 @@ def link_entities(
     sfd_ck = surface_forms.localCheckpoint(eager=True)
     n_probe = sfd_ck.limit(broadcast_rows + 1).count()
     if n_probe <= broadcast_rows:
-        spark = pages.sparkSession
-        rows = sfd_ck.collect()  # bounded: probe proved ≤ broadcast_rows
-        surfaces = sorted({r["surface"] for r in rows})
-        sfd = spark.createDataFrame(rows, schema=surface_forms.schema)
-        mentions = detect_mentions(pages, sfd, surfaces=surfaces)
-        best = score_candidates(mentions, sfd, salt_buckets=0)
+        # bounded: the probe proved ≤ broadcast_rows rows; the scoring
+        # join broadcasts the checkpoint itself, so only the surfaces
+        # come to the driver
+        surfaces = sorted(
+            {r["surface"] for r in sfd_ck.select("surface").collect()}
+        )
+        mentions = detect_mentions(pages, sfd_ck, surfaces=surfaces)
+        best = score_candidates(mentions, sfd_ck, salt_buckets=0)
     else:
         sfd = sfd_ck
         dsurf = (

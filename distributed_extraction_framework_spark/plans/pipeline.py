@@ -34,10 +34,13 @@ from ..operators import extractors as X
 from ..operators.canonicalize import canonicalize_quads, connected_components
 from ..operators.linking import link_entities, surface_forms_from_labels
 from ..operators.redirects import harvest_redirects, resolve_objects, transitive_closure
+from ..session import local_frame
 from . import materialize as M
 
-LINEAGE_COLS = ["run_id", "stage", "partition", "n_rows", "wall_ms",
-                "input_fingerprint", "status", "ts"]
+LINEAGE_SCHEMA = ("run_id string, stage string, partition string, "
+                  "n_rows bigint, wall_ms bigint, input_fingerprint string, "
+                  "status string, ts bigint")
+METRICS_SCHEMA = "run_id string, metric string, value bigint, ts bigint"
 
 
 @dataclass
@@ -172,19 +175,21 @@ class Pipeline:
         sync). All completion/total checks answer from this driver-side
         list instead of a parquet read + filter + count job each."""
         if self._lineage_cache is None:
-            try:
-                rows = (
-                    self.spark.read.parquet(self._stage_path("lineage"))
-                    .select("stage", "partition", "n_rows",
-                            "input_fingerprint", "status")
-                    .collect()
-                )
-                self._lineage_cache = [
-                    (r["stage"], r["partition"], r["n_rows"],
-                     r["input_fingerprint"], r["status"]) for r in rows
-                ]
-            except Exception:
-                self._lineage_cache = []
+            path = self._stage_path("lineage")
+            # a fresh warehouse has no committed lineage yet: probe the
+            # commit marker instead of letting the read fail (Spark logs
+            # the failed read as an ERROR on every cold run)
+            rows = (
+                self.spark.read.parquet(path)
+                .select("stage", "partition", "n_rows",
+                        "input_fingerprint", "status")
+                .collect()
+                if self._exists(path + "/_SUCCESS") else []
+            )
+            self._lineage_cache = [
+                (r["stage"], r["partition"], r["n_rows"],
+                 r["input_fingerprint"], r["status"]) for r in rows
+            ]
         return self._lineage_cache
 
     def _lineage_complete(self, stage: str, fingerprint: str,
@@ -206,14 +211,14 @@ class Pipeline:
             if s == stage and st == "complete" and f == fingerprint
         )
 
+    def _exists(self, path: str) -> bool:
+        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jvm_path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return fs.exists(jvm_path)
+
     def _committed(self, stage: str, fingerprint: str) -> bool:
         """Stage output exists AND lineage says it completed for this input."""
-        path = self._stage_path(stage)
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-        fs = jvm_path.getFileSystem(
-            self.spark._jsc.hadoopConfiguration()
-        )
-        if not fs.exists(jvm_path):
+        if not self._exists(self._stage_path(stage) + "/_SUCCESS"):
             return False
         return self._lineage_complete(stage, fingerprint)
 
@@ -231,7 +236,7 @@ class Pipeline:
     def _flush_lineage(self) -> None:
         if not self._lineage_rows:
             return
-        df = self.spark.createDataFrame(self._lineage_rows, LINEAGE_COLS)
+        df = local_frame(self.spark, self._lineage_rows, LINEAGE_SCHEMA)
         df.write.mode("append").parquet(self._stage_path("lineage"))
         self._lineage_rows = []
 
@@ -498,8 +503,8 @@ class Pipeline:
                 (self.run_id, "pages_in", int(pages_obs.get["pages_in"]), ts),
                 (self.run_id, "quads_out", int(obs.get["quads_out"]), ts),
             ]
-            self.spark.createDataFrame(
-                metrics, ["run_id", "metric", "value", "ts"]
+            local_frame(
+                self.spark, metrics, METRICS_SCHEMA
             ).write.mode("append").parquet(self._stage_path("metrics"))
         return outputs
 

@@ -292,8 +292,8 @@ def incremental_web_triples(
     reference: the incremental-download rationale in download/src/main/
     scala/org/dbpedia/extraction/dump/download/DumpDownload.scala).
 
-    Mechanics — exactly three corpus-key shuffles and ONE extraction
-    pass over only the changed slice:
+    Mechanics — three logical steps, extracting over only the changed
+    slice:
 
     1. payload-digest diff of the two capture sets
        (:func:`~distributed_extraction_framework_spark.operators.webarchive.recrawl_diff`
@@ -303,6 +303,14 @@ def incremental_web_triples(
        were extracted under);
     3. ``web_page_triples`` over ONLY the changed/added v2 pages
        (left-semi join, then the shuffle-free composite), unioned back.
+
+    Measured physical shape: the composite fans the changed-slice
+    semi-join out into its five channels, and Spark re-executes it once
+    per channel — the plan has 30 Exchanges, 30 Sorts, 15 sort-merge
+    joins and 15 parquet scans, so five corpus shuffle writes where the
+    steps above read as one. A broadcast + pin rewrite that removes them
+    lost its A/B at a ~5k-key diff and was reverted; OPTIMIZATION_r06.md
+    §22 has the numbers and the size gate it would need at recrawl scale.
 
     Invariant (driver-gated): the patched table is row-identical to
     ``web_page_triples(pages_v2)`` recomputed from scratch.

@@ -50,6 +50,29 @@ def test_detect_and_link(spark, pages_df):
     assert all(r["dataset"] == "entity_links" for r in rows)
 
 
+def test_link_entities_small_dict_rows_unchanged(spark, pages_df):
+    """The broadcast tier scores against the checkpointed dictionary; its
+    rows equal the former form, which re-created the collected dictionary
+    on the driver and scored against that copy."""
+    quads = extract(pages_df, extractors=["labels"]).cache()
+    sf = surface_forms_from_labels(quads).cache()
+    rows = sf.collect()
+    old_sfd = spark.createDataFrame(rows, schema=sf.schema)
+    mentions = detect_mentions(
+        pages_df, old_sfd, surfaces=sorted({r["surface"] for r in rows})
+    )
+    cols = ["subj", "surface", "obj", "n_mentions", "score"]
+    expected = sorted(
+        tuple(r) for r in score_candidates(mentions, old_sfd, salt_buckets=0)
+        .select(F.col("page").alias("subj"), "surface",
+                F.col("entity").alias("obj"), "n_mentions", "score")
+        .collect()
+    )
+    got = sorted(tuple(r) for r in link_entities(pages_df, sf)
+                 .select(*cols).collect())
+    assert got and got == expected
+
+
 def test_salted_join_matches_unsalted(spark, pages_df):
     """Salting is a physical optimization — results must be identical."""
     quads = extract(pages_df, extractors=["labels"]).cache()
